@@ -83,7 +83,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": ad-hoc optimizer-conf A/B runs
-    // (same contract as graft.Explain; protocol legs leave it unset)
+    // (protocol legs leave it unset; per-layer profiles of a run come
+    // from `perfbench/run.py --trace 1`)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)
@@ -213,36 +214,9 @@ object Bench {
       java.nio.file.Paths.get("bench_headline.json"), headline + "\n")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_full.json"), fullLine + "\n")
-    // Driver-visible per-query map (r16, PERF_r15 postmortem): the
-    // full-precision map lives on the queries_full line (~5 KB) and in
-    // bench_full.json, but the driver's regression comparator only sees
-    // a 2000-char stdout TAIL — r15's PERF came back with n_common: 0
-    // because no line that fits the window carried the map. The map
-    // itself (137 keys × ~23 chars at 3 decimals) can never fit one
-    // window together with the headline, so it is chunked into ≤900-char
-    // {"metric":"queries_part","i":I,"k":K,...} lines printed right
-    // before the final headline: a tail reader always gets the last
-    // chunk(s) intact, and a whole-stdout reader reconstructs all K.
-    val partLines = {
-      val pairs = names.map(n =>
-        "\"" + n + "\":" + med.get(n).map(r3).getOrElse("null"))
-      val chunks = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer[String]())
-      pairs.foreach { p =>
-        if (chunks.last.map(_.length + 1).sum + p.length > 900)
-          chunks += scala.collection.mutable.ArrayBuffer[String]()
-        chunks.last += p
-      }
-      val k = chunks.size
-      chunks.zipWithIndex.map { case (c, i) =>
-        s"""{"metric":"queries_part","i":$i,"k":$k,"queries":${
-          c.mkString("{", ",", "}")},"sf":"$sfDir","runs":$runs}"""
-      }.toSeq
-    }
     spark.stop()
     // Printed after SparkSession teardown so no late Spark/log4j writer
     // can interleave; the compact headline stays the ABSOLUTE last line.
-    partLines.foreach(println)
     println(headline)
   }
 }

@@ -628,12 +628,8 @@ final class Catalog(val spark: SparkSession, val database: String) {
     // place; a re-run overwrites only what it recomputes). Measured
     // same-window at sf0.1 (c_compact_cluster gate, 3-run median):
     // 10.04 s → 6.43 s.
-    // pool width (r16): GRAFT_CLUSTER_POOL overrides for sweeps; the
-    // default stays the r15-measured 3. Transient scratch is bounded
-    // by POOL partitions' footprint — still O(1) in table size.
-    val poolSize = sys.env.get("GRAFT_CLUSTER_POOL").map(_.toInt).getOrElse(3)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      poolSize.min(jobs.size.max(1)).max(1))
+      math.min(3, jobs.size.max(1)))
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
       val writes = jobs.map { pred =>
@@ -767,19 +763,24 @@ final class Catalog(val spark: SparkSession, val database: String) {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     import spark.implicits._
-    implicit val ec: ExecutionContext = ExecutionContext.global
     // footer opens are independent metadata reads — on an object store
     // each is a round-trip, so they run concurrently, not in a
-    // sequential driver loop over every relation
+    // sequential driver loop over every relation. The pool is created
+    // here, so its threads inherit the caller's Spark job group.
     val rels = for {
       schema <- listSchemas(); tbl <- listRelations(schema)
     } yield (schema, tbl)
-    val rows = Await.result(
-      Future.traverse(rels) { case (schema, tbl) =>
-        Future(columnsOf(schema, tbl).zipWithIndex.map { case (f, i) =>
-          (database, schema, tbl, f.name, (i + 1).toLong, f.dataType.sql)
-        })
-      }, Duration.Inf).flatten
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      Runtime.getRuntime.availableProcessors)
+    val rows = try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      Await.result(
+        Future.traverse(rels) { case (schema, tbl) =>
+          Future(columnsOf(schema, tbl).zipWithIndex.map { case (f, i) =>
+            (database, schema, tbl, f.name, (i + 1).toLong, f.dataType.sql)
+          })
+        }, Duration.Inf).flatten
+    } finally pool.shutdown()
     rows.toDF("table_database", "table_schema", "table_name",
       "column_name", "ordinal_position", "column_type")
   }

@@ -2,8 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults every graft entry point (Bench / Verify / Explain /
-  * tests) applies on top of its own master/parallelism settings.
+/** Session defaults every graft entry point (Bench / Verify / the
+  * perfbench harness / tests) applies on top of its own
+  * master/parallelism settings.
   *
   * The join policy encodes the library's scale stance: no query may
   * FORCE a broadcast of a corpus-proportional side (`broadcast()`

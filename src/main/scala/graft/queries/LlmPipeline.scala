@@ -72,20 +72,10 @@ object LlmPipeline extends QueryModule {
         val batch = dupes.unionByName(novel)
           .filter(length(col("text")) >= 100) // quality floor
           .withColumn("sig", md5(nrm))
-        // r16 (ADVICE r15): the r15 min_by(lang, doc_id) shortcut
-        // assumed batch doc_ids are unique, but the +2M/+3M offset
-        // ranges collide once the corpus exceeds 1M docs (gen_scale
-        // reaches 5M at sf100): a novel id 3M+s can equal a dupe id
-        // (s+1M)+2M, and the oracle's join-back on doc_id then emits
-        // TWO rows where the aggregate emits one. The join-back is
-        // therefore semantics, not plumbing — restored, but on a
-        // narrow persisted projection of the batch (doc_id, lang,
-        // sig — never the text) so the corpus-filter+md5 subtree the
-        // r15 change was killing still executes exactly once. The
-        // GateCache registration recomputes per invocation (the
-        // s4.reps pattern — no cross-run reuse).
-        val qualified = GateCache.swap("d8.batch",
-          batch.select(col("doc_id"), col("lang"), col("sig")).persist())
+        // (doc_id, lang, sig) of every batch row; the join-back on
+        // doc_id is semantics, not plumbing: the +2M/+3M id ranges
+        // collide past 1M docs, and the oracle then emits both rows
+        val qualified = batch.select(col("doc_id"), col("lang"), col("sig"))
         val batchKeep = qualified
           .groupBy(col("sig")).agg(min(col("doc_id")).as("doc_id"))
         batchKeep

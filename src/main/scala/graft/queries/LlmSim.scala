@@ -340,38 +340,14 @@ object LlmSim extends QueryModule {
     * 100 TB-safe order of operations (exact verification never
     * touches non-candidate pairs).
     */
-  private def verifyJaccard(cands: DataFrame, tri0: DataFrame,
-      thresh: Double, cacheKey: String): DataFrame = {
-    // r16: the shingle stream is referenced THREE times below (the
-    // per-doc size aggregate and both intersection joins), and each
-    // reference re-executed the whole corpus subtree (scan → exact
-    // collapse → normalize → trigram explode → distinct; the subtrees
-    // shuffle on different keys so ReuseExchange fuses none of them —
-    // d4's r15 plan had 7 document scans, 4 on the verify side).
-    // Persist it once per invocation instead: materialize-once /
-    // read-thrice is strictly less work than three full recomputes
-    // (guide §1.2 step 1, §5 caching-when-reused). GateCache
-    // registration recomputes per invocation and releases the previous
-    // handle (the adjudicated s4.reps pattern — no cross-run reuse).
-    val tri = GateCache.swap(cacheKey, tri0.persist())
-    // All-inner shape (r15; D4Prof-adjudicated across three arms at
-    // sf0.1/sf10/sf100). thresh > 0 (required below) means a pair
-    // with ZERO shared shingles can never reach the output, so the
-    // r8-r14 left_outer + coalesce(ni, 0) re-attach was dead
-    // generality — and an expensive one: a left_outer cannot build
-    // its left side, so the whole CANDIDATE DAG (bands/buckets,
-    // windows, distinct) executed a second time as the streamed side.
-    // With every join inner, `cands` executes once and its broadcast
-    // is reused. Two rejected variants, both measured:
-    //   - carrying per-doc sizes on the shingle rows via a window
-    //     count (tri 2x instead of 4x): the two full-row
-    //     Exchange+Sorts the window needs cost MORE than the two
-    //     saved shingle-subtree executions at every SF tried (d4
-    //     sf100 min-leg 14.3 s vs 9.2 s here; sf0.1 9.5 vs 8.0);
-    //   - semi-filtering the shingle stream to candidate docs before
-    //     the distinct: the extra materialization wave + raw-stream
-    //     probe lost at sf0.1 (d2 1.9 → 4.5 s) with no sf100 payback.
-    // Same counts, same jaccard arithmetic, same output set as r8.
+  private def verifyJaccard(cands: DataFrame, tri: DataFrame,
+      thresh: Double): DataFrame = {
+    // `tri` is read three times (per-doc sizes and both intersection
+    // joins). Every join is inner: thresh > 0 means a pair with no
+    // shared shingle can never reach the output, and with inner joins
+    // `cands` executes once and its broadcast is reused (a left_outer
+    // cannot build its left side and would re-run it as the streamed
+    // side).
     require(thresh > 0,
       "verifyJaccard: inner-join form drops zero-intersection pairs, " +
         "which is only equivalent for a strictly positive threshold")
@@ -433,18 +409,10 @@ object LlmSim extends QueryModule {
         val K = 3
         val W = 48
         val e = t(s, dir, "embeddings")
-        // persisted (r15): reps is referenced FIVE times in this graph
-        // build (cell assignment + two embedding join-backs in each of
-        // the two scorePairs passes), each reference re-running the
-        // corpus groupBy(embedding). Lazy persist — the first job
-        // materializes it in-flight, no extra action wave — and the
-        // GateCache registration means the next s4/s4b invocation
-        // releases this copy (the d6 working-set pattern).
-        val reps = graft.queries.GateCache.swap("s4.reps",
-          e.groupBy(col("embedding"))
-            .agg(min(col("vec_id")).as("vec_id"))
-            .select(col("vec_id"), col("embedding"))
-            .persist())
+        // one min-id representative per distinct embedding
+        val reps = e.groupBy(col("embedding"))
+          .agg(min(col("vec_id")).as("vec_id"))
+          .select(col("vec_id"), col("embedding"))
         val centroids = trainCentroids(s,
           e.filter(col("vec_id") < 5000)
             .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
@@ -461,10 +429,11 @@ object LlmSim extends QueryModule {
             lead(col("vec_id"), i).over(wCell)): _*))
           .select(col("vec_id"), explode(col("nbrs")).as("nbr_id"))
           .filter(col("nbr_id").isNotNull)
-        val candIds = graft.queries.GateCache.swap("s4_cand", fwd
+        // provisional candidate pairs, both directions, deduplicated
+        val candIds = fwd
           .union(fwd.select(col("nbr_id").as("vec_id"),
             col("vec_id").as("nbr_id")))
-          .distinct().cache())
+          .distinct()
         def scorePairs(cand: DataFrame): DataFrame = cand
           .join(reps.select(col("vec_id"), col("embedding").as("xv")),
             Seq("vec_id"))
@@ -485,19 +454,10 @@ object LlmSim extends QueryModule {
         // expand from a wider provisional graph (top-8, not top-K):
         // composition through rank-4..8 edges is what reaches the
         // neighbors the 1-D neighborhood ordering missed
-        // r16 (the r15 verdict's scorePairs-double-pass task): the old
-        // final pass scored candIds ∪ expanded from scratch, re-paying
-        // the two embedding join-backs and the dot products for every
-        // provisional pair that g0 had ALREADY scored. Persist the
-        // provisional scores once per invocation (GateCache — no
-        // cross-run reuse), score only the pairs the NN-descent
-        // expansion genuinely added (left_anti on the 16-byte id pair),
-        // and union the two score sets. Pair sets are disjoint by the
-        // anti-join and jointly cover candIds ∪ expanded exactly once —
-        // identical input to the final rank window, cosine is a pure
-        // function of the pair.
-        val score1 = graft.queries.GateCache.swap("s4.score1",
-          scorePairs(candIds).persist())
+        // cosine of every provisional pair; the final pass scores only
+        // the pairs the expansion adds (left_anti on the id pair) and
+        // unions the two disjoint score sets
+        val score1 = scorePairs(candIds)
         val g0 = score1
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 8)
@@ -544,15 +504,10 @@ object LlmSim extends QueryModule {
         // expansion joins on the 8-byte rep_id instead of re-hashing
         // the 256-byte float array. Identity on a dup-free corpus.
         val cand0 = e.filter(col("vec_id") >= 10)
-        // r16: grouped feeds the inverted lists AND the member-id
-        // expansion — two executions of the corpus exact-collapse
-        // groupBy. Persist once per invocation (GateCache — the
-        // s4.reps pattern, released on the next s3/s3b invocation).
-        val grouped = GateCache.swap("s3.grouped",
-          cand0.groupBy(col("embedding"))
-            .agg(min(col("vec_id")).as("rep_id"),
-              collect_list(col("vec_id")).as("member_ids"))
-            .persist())
+        // one row per distinct embedding: its rep id and member ids
+        val grouped = cand0.groupBy(col("embedding"))
+          .agg(min(col("vec_id")).as("rep_id"),
+            collect_list(col("vec_id")).as("member_ids"))
         val memberMap = grouped.select(col("rep_id"),
           explode(col("member_ids")).as("cand_id"))
         val cands = assign(
@@ -613,14 +568,9 @@ object LlmSim extends QueryModule {
           min(pmod(col("sh30") * a + b, lit(P30))).as(s"mh_$i")
         }
         val mh = tri.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
-        // r16: the signature table is referenced THREE times (band
-        // enumeration + both est_sim join-backs), each re-running the
-        // 16-way minhash aggregate over the shingle stream. Persist the
-        // narrow (doc_id, 16-long array) rows once per invocation
-        // (GateCache — the s4.reps pattern, no cross-run reuse).
-        val mhArr = GateCache.swap("d2.mh", mh.select(col("doc_id"),
+        // (doc_id, 16-long signature array) per document
+        val mhArr = mh.select(col("doc_id"),
           array((0 until 16).map(i => col(s"mh_$i")): _*).as("sig"))
-          .persist())
         val cands = minhashCandidates(mhArr)
         // Pre-filter floor = 2 matching minhashes of 16. With r=2
         // banding every candidate pair already shares both minhashes
@@ -645,7 +595,7 @@ object LlmSim extends QueryModule {
           .select(col("a"), col("b"))
         // exact-verify ONLY candidates (the 100 TB-safe order of
         // operations), on string shingles — oracle-grid jaccard
-        verifyJaccard(est, tri, thresh = 0.5, cacheKey = "d2.tri")
+        verifyJaccard(est, tri, thresh = 0.5)
       },
       Some(dupPairsOracle), quadraticOracle = true),
 
@@ -660,17 +610,13 @@ object LlmSim extends QueryModule {
         // pass — exact pairs are d1's O(n) job, and every reported
         // pair here is genuinely near-but-not-exact. Identity on a
         // dup-free corpus.
-        // r16: reps feeds BOTH the simhash candidate side and the
-        // verify side's shingle stream — two executions of the corpus
-        // scan + md5 collapse. Persist once per invocation (GateCache
-        // releases the previous handle; same pattern as s4.reps).
-        val reps = GateCache.swap("d4.reps", t(s, dir, "documents")
+        // feeds both the simhash candidate side and the verify side
+        val reps = t(s, dir, "documents")
           .groupBy(md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
             .as("fp"))
           .agg(min(col("doc_id")).as("doc_id"),
             min_by(col("text"), col("doc_id")).as("text"))
           .select(col("doc_id"), col("text"))
-          .persist())
         val sim = simhash64(reps)
           .select(col("doc_id"), col("simhash"))
         val chunks = sim.select(col("doc_id"), col("simhash"),
@@ -693,16 +639,11 @@ object LlmSim extends QueryModule {
         // exploded 8 rank probes per row and equi-joined them back on
         // (chunk, cval, rn) — a second full exchange+sort of 8n rows
         // the window operator already had in hand. Same pair set.
-        // r16: ranked is referenced THREE times below (exactBucket,
-        // headMembers, flipped), each re-running the simhash aggregate
-        // and this window from the corpus. Persist the one window pass
-        // (narrow rows: ids, 4 hash chunks, 8-struct lead array) and
-        // read it thrice instead (guide §1.2 step 1).
-        val ranked = GateCache.swap("d4.ranked", chunks
+        // per (chunk, doc): bucket rank and the next 8 bucket members
+        val ranked = chunks
           .withColumn("rn", row_number().over(wb))
           .withColumn("nbrs", array((1 to 8).map(i =>
             lead(struct(col("doc_id"), col("simhash")), i).over(wb)): _*))
-          .persist())
         val exactBucket = ranked
           .select(col("doc_id").as("a"), col("simhash").as("sim_a"),
             explode(col("nbrs")).as("nb"))
@@ -745,7 +686,7 @@ object LlmSim extends QueryModule {
           .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 12)
           .select(col("a"), col("b")).distinct()
         verifyJaccard(cands, shingles(reps.select(col("doc_id"), col("text"))),
-          thresh = 0.5, cacheKey = "d4.tri")
+          thresh = 0.5)
       },
       Some(dupPairsOracle), quadraticOracle = true),
 
@@ -1100,15 +1041,10 @@ object LlmSim extends QueryModule {
           .unionByName(injected)
         // 1. exact collapse (k byte-identical copies are k-1 drops here,
         //    never k²/2 pairs downstream)
-        // r16: reps feeds the cell-assignment/pairing side AND the
-        // final keep-list anti-join — two executions of the corpus
-        // union + exact-collapse groupBy. Persist once per invocation
-        // (GateCache releases the previous handle; the s4.reps pattern).
-        val reps = graft.queries.GateCache.swap("d11.reps",
-          corpus.groupBy(col("embedding"))
-            .agg(min(col("vec_id")).as("vec_id"))
-            .select(col("vec_id"), col("embedding"))
-            .persist())
+        //    (reps feeds the cell pairing and the final keep-list)
+        val reps = corpus.groupBy(col("embedding"))
+          .agg(min(col("vec_id")).as("vec_id"))
+          .select(col("vec_id"), col("embedding"))
         // 2. bounded-sample quantizer (shared machinery with s3)
         val centroids = trainCentroids(s,
           e0.filter(col("vec_id") < 5000)

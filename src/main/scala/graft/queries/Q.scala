@@ -92,34 +92,3 @@ object Q {
 trait QueryModule {
   def queries: Map[String, Q]
 }
-
-/** Per-session registry for the few persisted handles a gate must keep
-  * alive across its own build/first-action boundary (a lazily-returned
-  * DataFrame cannot unpersist its working set before the caller's
-  * action runs). Registering a handle under a stable key releases the
-  * PREVIOUS handle for that key, so a long-lived session (bench loops,
-  * repeated driver invocations) holds at most one cached copy per key
-  * instead of accumulating dead cached RDDs forever.
-  */
-object GateCache {
-  private val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def swap(key: String, df: DataFrame): DataFrame = {
-    // identityHashCode, not hashCode: two live sessions must never
-    // share a key (a collision would unpersist the other session's
-    // working set); stopped sessions are evicted below so the map
-    // cannot strongly reference dead plans for the JVM lifetime
-    val session = df.sparkSession
-    val k = System.identityHashCode(session) + ":" + key
-    val prev = handles.put(k, df)
-    if (prev != null && (prev ne df)) prev.unpersist(false)
-    handles.forEach { (key, h) =>
-      if (h.sparkSession.sparkContext.isStopped) handles.remove(key, h)
-    }
-    df
-  }
-
-  /** Number of live registered handles (for specs). */
-  def size: Int = handles.size
-}

@@ -235,7 +235,7 @@ object Relational extends QueryModule {
         // join's own hash probe pays anyway, so it only saves shuffle
         // I/O that was not the bottleneck (decomposition: liF subtree
         // 2.8 s + ordA subtree 3.4 s of 17.3 s; the residual is
-        // probe-bound, not exchange-bound). TailProf keeps the arms.
+        // probe-bound, not exchange-bound).
         val ordA = ord.select(col("o_orderkey"), col("o_custkey"))
           .join(custA, col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("n_nationkey"))
@@ -470,7 +470,7 @@ object Relational extends QueryModule {
         // groups.
         val counts = a.union(b).groupBy(col("key"))
           .agg(count(lit(1)).as("c"))
-        counts.agg(sum(col("c")).as("n_all"),
+        counts.agg(coalesce(sum(col("c")), lit(0L)).as("n_all"),
           count(lit(1)).as("n_distinct"))
       },
       Some("""SELECT
@@ -516,10 +516,10 @@ object Relational extends QueryModule {
           .groupBy(col("o_custkey"))
           .agg(max(col("in95")).as("a95"), max(col("in96")).as("a96"))
         flags.agg(
-            sum(when(col("a95") === 1 && col("a96") === 1, 1L)
-              .otherwise(0L)).as("n_inter"),
-            sum(when(col("a95") === 1 && col("a96") === 0, 1L)
-              .otherwise(0L)).as("n_exc"))
+            coalesce(sum(when(col("a95") === 1 && col("a96") === 1, 1L)
+              .otherwise(0L)), lit(0L)).as("n_inter"),
+            coalesce(sum(when(col("a95") === 1 && col("a96") === 0, 1L)
+              .otherwise(0L)), lit(0L)).as("n_exc"))
           .select(explode(map(
             lit("intersect"), col("n_inter"),
             lit("except"), col("n_exc"))).as(Seq("op", "n")))

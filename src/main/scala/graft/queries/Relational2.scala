@@ -289,7 +289,7 @@ object Relational2 extends QueryModule {
         // partial cheap there; the win here is not re-keying the
         // partial but never tripling the scan output at all).
         // r15 (verdict task 5) — the shared-scan lever is also
-        // REJECTED, measured same-window at sf100 (Q27Prof): shipped
+        // REJECTED, measured same-window at sf100: shipped
         // 16.6/20.0 s; a cache()+count() shared base pays 26.1 s to
         // materialize and its hot passes (17.9/18.7 s) are no faster
         // than three pushed-down 3-column parquet rescans; fusing n
@@ -333,7 +333,7 @@ object Relational2 extends QueryModule {
     // oracle recomputes the exact count and asserts the verdict true.
     // A broken HLL (or a silently swapped column) flips approx_ok and
     // goes red; the estimate is deterministic for fixed data. rsd=0.01
-    // justified by the r14 rsd-cost curve (Q27bProf, sf0.01→sf100):
+    // justified by the r14 rsd-cost curve (sf0.01→sf100):
     // rsd 0.05 errs 2.4-7.2% — it FAILS the 2% verdict at every
     // measured SF; 0.023 passes (0.88-1.8%) but with <10% headroom at
     // sf10; 0.01 is comfortable (0.2-0.67%) and costs nothing

@@ -45,6 +45,29 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val sevens = rows.find(r => !r.isNullAt(0) && r.getLong(0) == 7).get
     assert(sevens.getLong(1) == 1 && sevens.getLong(2) == 7L)
   }
+
+  /** A dir holding an `orders` table with the real schema and no rows. */
+  private def emptyOrdersDir(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_orders").toString
+    spark.read.parquet(s"${TestSpark.SF}/orders.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  test("q14_union counts 0, not NULL, on empty orders") {
+    val rows = SparkEntry.queries("q14_union")(spark, emptyOrdersDir()).collect()
+    assert(rows.length == 1, s"expected one row, got ${rows.toSeq}")
+    assert(!rows(0).isNullAt(0) && rows(0).getLong(0) == 0L &&
+      !rows(0).isNullAt(1) && rows(0).getLong(1) == 0L,
+      s"expected (n_all, n_distinct) = (0, 0), got ${rows(0)}")
+  }
+
+  test("q15_setops counts 0, not NULL, on empty orders") {
+    val rows = SparkEntry.queries("q15_setops")(spark, emptyOrdersDir())
+      .collect().map(r => r.getString(0) -> r.get(1)).toSeq
+    assert(rows == Seq("except" -> 0L, "intersect" -> 0L),
+      s"expected intersect and except counts of 0, got $rows")
+  }
 }
 
 /** s2's LSH candidates must be a subset of the exact ranking and
