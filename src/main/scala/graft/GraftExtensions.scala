@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{FloatVecDot, RollingFingerprint}
+import graft.functions.{FloatVecDot, RollingFingerprint, SimHash64}
 
 /** Session extensions for the graft engine: registers the native
   * expressions so plain SQL users reach them —
@@ -19,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.floatVecDotDescriptor)
     ext.injectFunction(GraftExtensions.rollingFingerprintDescriptor)
+    ext.injectFunction(GraftExtensions.simHash64Descriptor)
   }
 }
 
@@ -34,6 +35,11 @@ object GraftExtensions {
     RollingFingerprint(args.head)
   }
 
+  private def buildSimHash(args: Seq[Expression]): Expression = {
+    require(args.length == 1, "simhash64 expects exactly 1 argument")
+    SimHash64(args.head)
+  }
+
   val floatVecDotDescriptor
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("float_vec_dot"),
@@ -47,11 +53,19 @@ object GraftExtensions {
       "rolling_fingerprint"),
     buildFp)
 
+  val simHash64Descriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("simhash64"),
+    new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
+    buildSimHash)
+
   /** Register on an already-built session (temp function). */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "float_vec_dot", build, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "rolling_fingerprint", buildFp, "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "simhash64", buildSimHash, "scala_udf")
   }
 }

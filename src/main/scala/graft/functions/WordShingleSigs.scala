@@ -177,7 +177,7 @@ object WordShingleSigs {
     combine(ha, hb, m, n)
   }
 
-  private def isWsByte(b: Int): Boolean =
+  private[functions] def isWsByte(b: Int): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' ||
       b == '\r'
 

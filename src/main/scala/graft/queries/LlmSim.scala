@@ -185,72 +185,27 @@ object LlmSim extends QueryModule {
     cents
   }
 
-  /** 64-bit SimHash per document: (doc_id, n_words, simhash).
-    *
-    * Bit-majority counting uses packed-lane sums in a two-level
-    * aggregation so the counters are exact at any realistic document
-    * length:
-    *   - level 1 groups by (doc_id, 127-word chunk) and sums 8 longs
-    *     of 8 independent 8-bit lanes — a chunk holds ≤ 127 words, so
-    *     a lane cannot carry into its neighbor and the top lane's
-    *     weighted sum (127·2^56·…) stays under Long.Max;
-    *   - level 2 spreads each 8-bit lane into a 32-bit slot (mask
-    *     0x000000FF000000FF shifted — two lanes per long, 32 sums) and
-    *     sums per doc — exact up to 2^31 words per document, with a
-    *     raise_error guard past that instead of a silent wrap.
-    * The pre-round-3 single-level version silently corrupted the
-    * simhash of any ≥ 256-word document. Everything here is codegen'd
-    * HashAggregates — higher-order array folds would run interpreted
-    * and re-evaluate the hash per fold; level 1's map-side combine
-    * does the bulk reduction, so level 2's 33 buffers only ever see
-    * one row per 127 words.
+  /** 64-bit SimHash per document: (doc_id, simhash), one projection
+    * over the native [[graft.functions.SimHash64]] kernel. A document's
+    * words are those of `split(lower(trim(regexp_replace(text, '\s+',
+    * ' '))), ' ')`, each hashed with `xxhash64`; bit b is set when more
+    * than half of the words have it set. Null text gives a null
+    * simhash.
     */
-  private[graft] def simhash64(docs: DataFrame): DataFrame = {
-    val LANES8 = 0x0101010101010101L
-    val SPREAD = 0x000000FF000000FFL // lanes k and k+4 → 32-bit slots
-    val hashed = docs
-      .select(col("doc_id"),
-        posexplode(split(lower(trim(regexp_replace(col("text"), "\\s+", " "))),
-          " ")).as(Seq("pos", "w")))
-      .select(col("doc_id"), (col("pos") / 127).cast("int").as("chk"),
-        xxhash64(col("w")).as("wh"))
-    val lvl1Aggs = count(lit(1)).as("cn") +: (0 until 8).map { j =>
-      sum(shiftright(col("wh"), j).bitwiseAND(LANES8)).as(s"p_$j")
-    }
-    val lvl1 = hashed.groupBy(col("doc_id"), col("chk"))
-      .agg(lvl1Aggs.head, lvl1Aggs.tail: _*)
-    val lvl2Aggs = sum(col("cn")).as("n_words") +: (0 until 8).flatMap { j =>
-      (0 until 4).map { k =>
-        sum(shiftrightunsigned(col(s"p_$j"), 8 * k).bitwiseAND(SPREAD))
-          .as(s"q_${j}_$k")
-      }
-    }
-    val packed = lvl1.groupBy(col("doc_id"))
-      .agg(lvl2Aggs.head, lvl2Aggs.tail: _*)
-    // bit b lived in 8-bit lane l = b/8 of p_{b%8}; after the spread it
-    // is the (l/4)-th 32-bit slot of q_{b%8}_{l%4}
-    def cnt(b: Int): Column = {
-      val (j, l) = (b % 8, b / 8)
-      shiftrightunsigned(col(s"q_${j}_${l % 4}"), 32 * (l / 4))
-        .bitwiseAND(0xFFFFFFFFL)
-    }
-    val sim = (0 until 64).map { b =>
-      when(cnt(b) * 2 > col("n_words"), lit(1L << b)).otherwise(0L)
-    }.reduce(_ + _)
-    packed.select(col("doc_id"), col("n_words"),
-      when(col("n_words") < (1L << 31), sim)
-        .otherwise(raise_error(concat(
-          lit("simhash64: document "), col("doc_id"), lit(" has "),
-          col("n_words"),
-          lit(" words, beyond the 2^31-word exact-counter capacity"))))
-        .as("simhash"))
-  }
+  private[graft] def simhash64(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      graft.functions.SimHash64.of(lower(col("text"))).as("simhash"))
 
-  /** Word-trigram shingles of the normalized text, hashed into [0, 2^30). */
+  /** Word-trigram shingles of the normalized text, hashed into [0, 2^30).
+    * A document with fewer than 3 words has no trigram (as in
+    * [[dupPairsOracle]]); it is dropped before the window indexing,
+    * which would otherwise read past its last word.
+    */
   private def shingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ")
         .as("words"))
+      .filter(size(col("words")) >= 3)
       .select(col("doc_id"),
         explode(expr(
           """transform(sequence(0, size(words) - 3),
@@ -600,9 +555,9 @@ object LlmSim extends QueryModule {
       Some(dupPairsOracle), quadraticOracle = true),
 
     // ─── d4: SimHash near-dup (64-bit, 16-bit-chunk banding) ───
-    // Signatures come from [[simhash64]] (two-level exact packed-lane
-    // majority counters, loud failure past 65,535 words); banding +
-    // sorted-neighborhood candidate generation below.
+    // Signatures come from [[simhash64]] (one projection over the
+    // native kernel); banding + sorted-neighborhood candidate
+    // generation below.
     "d4_dedup_simhash" -> Q(
       (s, dir) => {
         // exact-then-near: byte-identical texts collapse to their
@@ -618,7 +573,6 @@ object LlmSim extends QueryModule {
             min_by(col("text"), col("doc_id")).as("text"))
           .select(col("doc_id"), col("text"))
         val sim = simhash64(reps)
-          .select(col("doc_id"), col("simhash"))
         val chunks = sim.select(col("doc_id"), col("simhash"),
           explode(array((0 until 4).map { c =>
             struct(lit(c).as("chunk"),

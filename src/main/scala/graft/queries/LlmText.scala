@@ -144,8 +144,9 @@ object LlmText extends QueryModule {
         val docs = t(s, dir, "documents")
           .filter(col("doc_id") % 5 === 0 && col("doc_id") < 750)
           .select(col("doc_id"), split(norm(col("text")), " ").as("words"))
-        // word trigram shingles, distinct per doc
-        val tri = docs.select(col("doc_id"),
+        // word trigram shingles, distinct per doc; a doc of fewer than
+        // 3 words has none (its window indexing would read past the end)
+        val tri = docs.filter(size(col("words")) >= 3).select(col("doc_id"),
           explode(expr(
             """transform(sequence(0, size(words) - 3),
                  i -> concat_ws(' ', words[i], words[i+1], words[i+2]))"""))

@@ -337,6 +337,35 @@ class PlanSpec extends AnyFunSuite {
         s"size, not a corpus-side exchange:\n$p")
   }
 
+  test("d4 signs documents with the native simhash kernel, no word explode") {
+    // one projection over SimHash64 replaced a posexplode of every
+    // word feeding two shuffled packed-lane aggregations; the final
+    // plan had 11 shuffle exchanges at the spec's scale before that
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val df = SparkEntry.queries("d4_dedup_simhash")(spark, TestSpark.SF)
+    // the optimized plan: the physical one may fold the kernel into the
+    // reps aggregate's result projection, which it prints as output only
+    val p = df.queryExecution.optimizedPlan.toString
+    val kernel = graft.functions.SimHash64(Literal("")).prettyName
+    assert(p.contains(kernel), s"d4 lost the native $kernel kernel:\n$p")
+    assert(!p.contains("posexplode"), s"d4 re-grew a word explode:\n$p")
+    df.queryExecution.toRdd.count()
+    def nodes(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    val exchanges = nodes(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeLike])
+    info(s"d4 final plan: $exchanges shuffle exchanges")
+    assert(exchanges < 11,
+      s"d4's final plan has $exchanges shuffle exchanges:\n" +
+        df.queryExecution.executedPlan)
+  }
+
   test("d1/d1b dedup sigs are 16-byte binaries, not hex strings") {
     // unhex(md5(..)) must survive: a regression to hex md5 strings
     // doubles every sig exchange's key bytes and the window sort width

@@ -222,25 +222,12 @@ class ApproxCountSpec extends AnyFunSuite {
   }
 }
 
-/** simhash64's packed-lane majority counters must be exact for
-  * documents spanning many 127-word chunks — the pre-round-3
-  * single-level version silently wrapped its 8-bit counters at 256
-  * words (and long-summing 255-word chunks would overflow under ANSI).
+/** simhash64's bit-majority counters must be exact for long
+  * documents — an earlier packed-lane form silently wrapped its 8-bit
+  * counters at 256 words.
   */
 class SimhashSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def bruteSimhash(words: Seq[String]): Long = {
-    import spark.implicits._
-    val hashes = words.distinct.toDF("w")
-      .select(col("w"), xxhash64(col("w")).as("h"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = words.size
-    (0 until 64).map { b =>
-      val cnt = words.count(w => ((hashes(w) >>> b) & 1L) == 1L)
-      if (2L * cnt > n) 1L << b else 0L
-    }.sum
-  }
 
   test("multi-chunk documents get exact bit counts (300, 700, 70000 words)") {
     import spark.implicits._
@@ -254,12 +241,60 @@ class SimhashSpec extends AnyFunSuite {
     val df = docs.map { case (id, ws) => (id, ws.mkString(" ")) }
       .toDF("doc_id", "text")
     val got = graft.queries.LlmSim.simhash64(df)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    for ((id, ws) <- docs) {
-      assert(got(id)._1 == ws.size.toLong, s"doc $id word count")
-      assert(got(id)._2 == bruteSimhash(ws), s"doc $id simhash mismatch")
-    }
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((id, ws) <- docs)
+      assert(got(id) == SimhashSpec.bruteSimhash(spark, ws),
+        s"doc $id simhash mismatch")
   }
+}
+
+object SimhashSpec {
+  /** Reference simhash of a word list: Spark's `xxhash64` per word,
+    * then a per-bit majority vote counted on the driver. */
+  def bruteSimhash(spark: org.apache.spark.sql.SparkSession,
+      words: Seq[String]): Long = {
+    import spark.implicits._
+    val hashes = words.distinct.toDF("w")
+      .select(col("w"), xxhash64(col("w")).as("h"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val n = words.size
+    (0 until 64).map { b =>
+      val cnt = words.count(w => ((hashes(w) >>> b) & 1L) == 1L)
+      if (2L * cnt > n) 1L << b else 0L
+    }.sum
+  }
+}
+
+/** d2, d3 and d4 over a corpus of documents too short to have a word
+  * trigram (0, 1 and 2 words, empty and whitespace-only text) next to
+  * one true near-duplicate pair: the short documents have no
+  * shingles, as in the DuckDB oracle, and must neither fail the call
+  * nor add a pair. Ids are multiples of 5 so d3's sample keeps them.
+  */
+class ShortDocDedupSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private val base = (0 until 60).map(i => s"word${(i * 7) % 41}").mkString(" ")
+
+  private lazy val dir: String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_short_docs").toString
+    val texts = Seq(
+      5L -> "", 10L -> " ", 15L -> "\t\n \u000B", 20L -> "solo", 25L -> "Solo ",
+      30L -> "two words", 35L -> "  another\tpair  ",
+      40L -> base, 45L -> s"$base tail")
+    texts.map { case (id, text) => (id, text, "en", "spec", text.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  for (key <- Seq("d2_dedup_minhash", "d3_ngram_jaccard", "d4_dedup_simhash"))
+    test(s"$key returns exactly the near-duplicate pair next to short documents") {
+      val pairs = SparkEntry.queries(key)(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(pairs == Seq(40L -> 45L), s"$key returned $pairs")
+    }
 }
 
 /** The exact-moment formulations in q25 must agree with Spark's

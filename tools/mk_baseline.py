@@ -4,10 +4,11 @@
 Usage: mk_baseline.py sf1=<spark.json>,<duck.json>[,<isolated.json>]
        [sf10=...] > BASELINE.md
 Local tooling; keeps the baseline document mechanically in sync with
-the measured numbers. The optional third path per SF is the
-isolate_flagged.py output (fresh-JVM 3-run medians for keys whose leg
-row was flagged as a likely throttle artifact); flagged keys then show
-BOTH columns.
+the measured numbers. The optional third path per SF is an isolated
+JSON (fresh-JVM 3-run medians for keys whose leg row was flagged as a
+likely throttle artifact), as archived under bench_legs/; flagged keys
+then show BOTH columns. The pass that produced it ran through
+graft.Explain and is retired.
 """
 import json
 import sys
@@ -60,8 +61,8 @@ Round-12 protocol notes:
   logged, so the RATIO columns stay meaningful under host
   throttling; absolute seconds are only comparable across rounds
   when the canary trail says quiet.
-- NEW r12: after each leg pair an auto-isolate pass
-  (tools/isolate_flagged.py) re-measures every flagged key (leg
+- NEW r12: after each leg pair an auto-isolate pass (retired with
+  graft.Explain) re-measures every flagged key (leg
   spread > 2 at >= 1 s, ratio > 3x at >= 2 s, or force-listed —
   force-listed keys are isolated only when the leg median is
   >= 1 s, so a sub-second forced key keeps its leg-only row) in
@@ -90,8 +91,8 @@ Round-13 leg provenance:
   t1 + t2 + t11 (native word-set scans), and four c_ gate
   verification sums. Their sf100/sf10 LEG cells (and t-keys' sf1
   cells) are pre-change; their ISOLATED cells are fresh-JVM
-  post-change re-measurements (tools/merge_iso_r13.py names each
-  override) — for changed keys read the isolated column only.
+  post-change re-measurements (bench_legs/r13/iso_*_merged.json)
+  — for changed keys read the isolated column only.
   sf0.1 legs ran after the first change batch; the isolate method is
   ONE fresh JVM per key (a same-JVM 5-key batch re-check measured
   q27 20.8 vs 15.6 isolated — cross-key JVM pollution is real).
@@ -171,7 +172,7 @@ def section(sf, spark, duck, isolated=None):
         out.append(
             "Flagged keys (leg spread > 2 at >= 1 s, or ratio > 3x at\n"
             ">= 2 s) carry an `isolated` column: a fresh-JVM warm 3-run\n"
-            "median taken right after the leg (tools/isolate_flagged.py).\n"
+            "median taken right after the leg.\n"
             "The leg column is never replaced — when the two disagree\n"
             "the leg row was a throttle artifact and the isolated column\n"
             "is the plan's honest grade.\n")

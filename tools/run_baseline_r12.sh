@@ -1,11 +1,8 @@
 #!/bin/bash
 # Round-12 baseline protocol: r11's method (full-plan action, canary
 # before every leg, paired back-to-back Spark/DuckDB legs per SF,
-# dedicated c_-only sf100 leg, sf100 first) PLUS the auto-isolate pass
-# (r11 verdict task #6): after each leg pair, keys whose leg row is a
-# likely throttle artifact (per-query spread > 2 at >= 1 s, or ratio
-# > 3x at >= 2 s) are re-measured in a fresh JVM each and published as
-# an `isolated` column beside the untouched leg row.
+# dedicated c_-only sf100 leg, sf100 first). Its fresh-JVM isolate
+# pass ran through graft.Explain, which no longer exists, and is gone.
 set -e
 cd /root/repo
 OUT=/tmp/baseline_r12
@@ -39,12 +36,6 @@ run_sf() {
     /tmp/graft_out/oracle_sql.json 3 2>/dev/null \
     | grep -F '"metric"' > "$OUT/duck_$tag.json"
   clean
-  echo "=== $tag isolate ($(date +%H:%M:%S)) ==="
-  canary "$tag isolate"
-  python3 tools/isolate_flagged.py "$OUT/spark_$tag.json" \
-    "$OUT/duck_$tag.json" "$dir" "$OUT/iso_$tag.json" \
-    2>&1 | tee -a "$OUT/isolate.log"
-  clean
 }
 
 run_sf sf100 benchdata/sf100 c_ ""
@@ -56,8 +47,6 @@ run_sf sf0.1 /root/testdata/sf0.1 "" ""
 echo "=== DONE ($(date +%H:%M:%S)) ==="
 echo "Render: python3 tools/mk_baseline.py \\"
 for tag in sf0.1 sf1 sf10 sf100 sf100c; do
-  iso=""
-  [ -s "$OUT/iso_$tag.json" ] && iso=",$OUT/iso_$tag.json"
-  echo "  $tag=$OUT/spark_$tag.json,$OUT/duck_$tag.json$iso \\"
+  echo "  $tag=$OUT/spark_$tag.json,$OUT/duck_$tag.json \\"
 done
 echo "  > BASELINE.md"

@@ -3,9 +3,8 @@
 # legs ran to completion on r12-final code (archived under
 # bench_legs/r12/ — the round ended during the sf10 isolate pass);
 # this runner measures the two missing legs (sf1, sf0.1) with the same
-# method, then the sf10 isolate keys the cutoff dropped, then fresh
-# isolated rows for the keys r13 changed (q62/q25/q9) at sf100+sf10 so
-# BASELINE can publish post-change columns beside the archived legs.
+# method. Its isolate passes ran through graft.Explain, which no longer
+# exists, and are gone.
 set -e
 cd /root/repo
 OUT=/tmp/baseline_r13
@@ -39,35 +38,9 @@ run_sf() {
     /tmp/graft_out/oracle_sql.json 3 2>/dev/null \
     | grep -F '"metric"' > "$OUT/duck_$tag.json"
   clean
-  echo "=== $tag isolate ($(date +%H:%M:%S)) ==="
-  canary "$tag isolate"
-  python3 tools/isolate_flagged.py "$OUT/spark_$tag.json" \
-    "$OUT/duck_$tag.json" "$dir" "$OUT/iso_$tag.json" \
-    2>&1 | tee -a "$OUT/isolate.log"
-  clean
 }
 
 run_sf sf1 benchdata/sf1 "" ""
 run_sf sf0.1 /root/testdata/sf0.1 "" ""
-
-# The sf10 isolate keys the r12 cutoff dropped (8 of 17 completed),
-# plus the three r13-changed keys, measured fresh-JVM each with the
-# isolate method (graft.Explain: untimed warm-up + 3-run median).
-iso_patch() {
-  local tag=$1 dir=$2; shift 2
-  canary "$tag iso_patch"
-  for k in "$@"; do
-    clean
-    SPARK_DRIVER_MEM=64g SPARK_GRAFT_CPUS=32 \
-      sbt -batch "runMain graft.Explain $dir $k" 2>/dev/null \
-      | grep "==" >> "$OUT/iso_patch_$tag.txt"
-  done
-  clean
-}
-iso_patch sf10 benchdata/sf10 \
-  q62_nation_pairs q47_salted_join c_dag_model q27b_approx_countd \
-  q5_multijoin q27_countd q59_stream_dedup c_incr_partition \
-  q39_stream_window q25_stats_agg q9_topk
-iso_patch sf100 benchdata/sf100 q9_topk
 
 echo "=== DONE ($(date +%H:%M:%S)) ==="

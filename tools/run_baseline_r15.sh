@@ -1,8 +1,8 @@
 #!/bin/bash
 # Round-15 baseline protocol: identical method to r12/r13 (full-plan
 # action, canary before every leg, paired back-to-back Spark/DuckDB
-# legs per SF, dedicated c_-only sf100 leg, sf100 first, auto-isolate
-# pass per leg pair) — re-run IN FULL on r15-final code so BASELINE
+# legs per SF, dedicated c_-only sf100 leg, sf100 first; the isolate
+# pass is gone with graft.Explain) — re-run IN FULL on r15-final code so BASELINE
 # carries single-code-version legs (r14 verdict task 2 cadence). Regenerates
 # the oracle dump first so the DuckDB replay always matches HEAD.
 set -e
@@ -51,12 +51,6 @@ run_sf() {
     /tmp/graft_out/oracle_sql.json 3 2>/dev/null \
     | grep -F '"metric"' > "$OUT/duck_$tag.json"
   clean
-  echo "=== $tag isolate ($(date +%H:%M:%S)) ==="
-  canary "$tag isolate"
-  python3 tools/isolate_flagged.py "$OUT/spark_$tag.json" \
-    "$OUT/duck_$tag.json" "$dir" "$OUT/iso_$tag.json" \
-    2>&1 | tee -a "$OUT/isolate.log"
-  clean
 }
 
 # fresh oracle dump from HEAD (the DuckDB legs replay this file)
@@ -73,8 +67,6 @@ run_sf sf0.1 /root/testdata/sf0.1 "" ""
 echo "=== DONE ($(date +%H:%M:%S)) ==="
 echo "Render: python3 tools/mk_baseline.py \\"
 for tag in sf0.1 sf1 sf10 sf100 sf100c; do
-  iso=""
-  [ -s "$OUT/iso_$tag.json" ] && iso=",$OUT/iso_$tag.json"
-  echo "  $tag=$OUT/spark_$tag.json,$OUT/duck_$tag.json$iso \\"
+  echo "  $tag=$OUT/spark_$tag.json,$OUT/duck_$tag.json \\"
 done
 echo "  > BASELINE.md"
